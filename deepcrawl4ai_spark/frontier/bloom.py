@@ -3,7 +3,8 @@
 The reference has no explicit visited-set (it leans on crawl4ai CacheMode,
 reference tasks.py:182) — here it is a first-class, checkpointable table:
 numpy bit-arrays per partition_id = int(url_hash[:4], 16) % P, built and
-merged with applyInPandas (vectorized, no per-row Python API), OR-merged
+merged with grouped applyInArrow passes (Arrow tables in and out, numpy
+inside — no pandas conversion, no per-row Python API), OR-merged
 across rounds (associative + idempotent → safe under task retries).
 
 Sizing is data-driven, not fixed (ADVICE r1: a fixed 2 MiB filter saturates
@@ -32,10 +33,11 @@ import math
 import os as _os
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 N_PARTITIONS = 128  # also the bloom stage's max parallelism
 K_HASHES = 4
@@ -70,6 +72,7 @@ FILTER_SCHEMA = T.StructType(
         T.StructField("round", T.IntegerType(), False),
     ]
 )
+_ARROW_FILTER_SCHEMA = to_arrow_schema(FILTER_SCHEMA)
 
 
 def partition_id_col(url_hash_col):
@@ -106,7 +109,7 @@ def est_fpr(n_items: int, m_bits: int, k: int = K_HASHES) -> float:
     return (1.0 - math.exp(-k * n_items / m_bits)) ** k
 
 
-def _bit_positions(url_hashes: pd.Series, m_bits: int) -> np.ndarray:
+def _bit_positions(url_hashes, m_bits: int) -> np.ndarray:
     """(n, K) bit positions via double hashing of the sha1 hex — vectorized."""
     h1 = np.array([int(h[:8], 16) for h in url_hashes], dtype=np.uint64)
     h2 = np.array([int(h[8:16], 16) | 1 for h in url_hashes], dtype=np.uint64)
@@ -114,7 +117,7 @@ def _bit_positions(url_hashes: pd.Series, m_bits: int) -> np.ndarray:
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
 
 
-def _set_bits(bits: np.ndarray, url_hashes: pd.Series, m_bits: int) -> None:
+def _set_bits(bits: np.ndarray, url_hashes, m_bits: int) -> None:
     pos = _bit_positions(url_hashes, m_bits).ravel()
     np.bitwise_or.at(bits, pos // 8, (1 << (pos % 8)).astype(np.uint8))
 
@@ -130,6 +133,50 @@ def _gen_row(pid: int, bits: np.ndarray, m: int, n: int, round_id: int) -> dict:
     }
 
 
+def _bloom_gen(pid: int, hashes, m: int, round_id: int) -> dict:
+    bits = np.zeros(m // 8, dtype=np.uint8)
+    _set_bits(bits, hashes, m)
+    return _gen_row(pid, bits, m, len(hashes), round_id)
+
+
+def _new_generation(pid: int, hashes, round_id: int, kind: str, min_bits: int) -> list[dict]:
+    """One right-sized generation holding all of *hashes* — the single build
+    rule behind build_filters, build_filter_rows_local and a brand-new
+    partition in add_to_filters."""
+    if kind == "cuckoo":
+        return _cuckoo_build_rows(pid, hashes, round_id, min_bits)
+    return [_bloom_gen(pid, hashes, size_for(len(hashes), min_bits), round_id)]
+
+
+# --- Arrow plumbing for the grouped passes ------------------------------------
+
+
+def _filter_table(rows: list[dict]) -> pa.Table:
+    return pa.Table.from_pylist(rows, schema=_ARROW_FILTER_SCHEMA)
+
+
+def _hashes(table: pa.Table) -> np.ndarray:
+    """The url_hash column as a numpy object array (mask-indexable)."""
+    return np.asarray(table.column("url_hash").to_pylist(), dtype=object)
+
+
+def _pid(table: pa.Table) -> int:
+    return table.column("partition_id")[0].as_py()
+
+
+def _generations(left: pa.Table, round_id: int) -> list[dict]:
+    """A partition's filter rows, oldest (smallest) generation first,
+    restamped with *round_id*."""
+    gens = sorted(left.to_pylist(), key=lambda g: g["m_bits"])
+    return [dict(g, round=round_id) for g in gens]
+
+
+def _with_pid(hashes_df: DataFrame) -> DataFrame:
+    return hashes_df.select(
+        "url_hash", partition_id_col(F.col("url_hash")).alias("partition_id")
+    )
+
+
 # --- cuckoo generation helpers (frontier/cuckoo.py does the table math) -------
 
 
@@ -141,12 +188,15 @@ def _cuckoo_min_buckets(min_bits: int) -> int:
 
 
 def _cuckoo_build_rows(
-    pid: int, hashes: pd.Series, round_id: int, min_bits: int, min_nb: int = 0
+    pid: int, hashes, round_id: int, min_bits: int, min_nb: int = 0
 ) -> list[dict]:
     """One right-sized cuckoo generation holding ALL of *hashes* (grows ×2
-    on the rare over-load kick failure — build never drops an item)."""
+    on the rare over-load kick failure — build never drops an item).
+    Hashes insert in sorted order, so the table bytes do not depend on the
+    order a shuffle delivered them in."""
     from deepcrawl4ai_spark.frontier import cuckoo as CK
 
+    hashes = sorted(hashes)
     nb = max(CK.n_buckets_for(len(hashes), _cuckoo_min_buckets(min_bits)), min_nb)
     while True:
         table = CK.new_table(nb)
@@ -167,28 +217,27 @@ def _cuckoo_build_rows(
 
 
 def _cuckoo_absorb(
-    out: list[dict], right: pd.DataFrame, round_id: int, min_bits: int
+    out: list[dict], hashes: np.ndarray, round_id: int, min_bits: int
 ) -> list[dict]:
     """Scalable-cuckoo absorb: fill the newest generation to its load-factor
     capacity; spill the remainder (capacity overflow OR kick failures) into
     a new ≥2× generation. Mirrors the bloom generation policy."""
     from deepcrawl4ai_spark.frontier import cuckoo as CK
 
-    pid = out[-1]["partition_id"]
     newest = out[-1]
     nb = CK.nb_of_m_bits(newest["m_bits"])
-    spill = right["url_hash"]
-    if newest["n_items"] + len(right) <= CK.capacity(nb):
+    spill = np.sort(hashes)
+    if newest["n_items"] + len(spill) <= CK.capacity(nb):
         table = CK.table_from_bytes(newest["bits"])
-        fps, i1, i2 = CK.keys(right["url_hash"], nb)
+        fps, i1, i2 = CK.keys(spill, nb)
         failed = CK.insert_batch(table, fps, i1, i2)
         newest["bits"] = CK.table_to_bytes(table)
-        newest["n_items"] = int(newest["n_items"]) + int((~failed).sum())
-        spill = right["url_hash"][failed]
+        newest["n_items"] += int((~failed).sum())
+        spill = spill[failed]
     if len(spill):
         # geometric floor (≥2× newest) keeps generation count O(log N)
         out.extend(
-            _cuckoo_build_rows(pid, spill, round_id, min_bits, min_nb=2 * nb)
+            _cuckoo_build_rows(newest["partition_id"], spill, round_id, min_bits, min_nb=2 * nb)
         )
     return out
 
@@ -200,50 +249,34 @@ def build_filters(
     each partition (one generation per partition). *kind* defaults to the
     module FILTER_KIND ('bloom' | 'cuckoo'), resolved driver-side and
     closure-captured so workers agree."""
-    with_pid = hashes_df.select(
-        "url_hash", partition_id_col(F.col("url_hash")).alias("partition_id")
-    )
     min_bits = MIN_BITS  # captured by value — driver config wins on workers
     kind = kind or FILTER_KIND
 
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["partition_id"].iloc[0])
-        if kind == "cuckoo":
-            return pd.DataFrame(
-                _cuckoo_build_rows(pid, pdf["url_hash"], round_id, min_bits)
-            )
-        m = size_for(len(pdf), min_bits)
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        _set_bits(bits, pdf["url_hash"], m)
-        return pd.DataFrame([_gen_row(pid, bits, m, len(pdf), round_id)])
+    def _build(table: pa.Table) -> pa.Table:
+        return _filter_table(
+            _new_generation(_pid(table), _hashes(table), round_id, kind, min_bits)
+        )
 
-    return with_pid.groupBy("partition_id").applyInPandas(_build, FILTER_SCHEMA)
+    return _with_pid(hashes_df).groupBy("partition_id").applyInArrow(_build, FILTER_SCHEMA)
 
 
 def build_filter_rows_local(url_hashes, round_id: int, kind: str | None = None) -> list[dict]:
     """Driver-side twin of build_filters for an ALREADY-DRIVER-RESIDENT hash
     list (the submit_seeds API edge — seeds arrive as a Python list, so
-    spinning up a shuffle + cogrouped applyInPandas just to build 128 tiny
-    numpy arrays is pure overhead; r8 profiling put it at 2-3 s of the
-    seed commit). Identical rows to build_filters by construction: same
-    partition_id math, same size_for sizing, same _set_bits bit positions.
-    The distributed builder remains the path for DataFrame-scale inputs
-    (submit_frontier, rebuilds)."""
+    spinning up a shuffle + cogrouped pass just to build 128 tiny numpy
+    arrays is pure overhead; r8 profiling put it at 2-3 s of the seed
+    commit). Byte-identical rows to build_filters: both call
+    _new_generation per partition. The distributed builder remains the path
+    for DataFrame-scale inputs (submit_frontier, rebuilds)."""
     kind = kind or FILTER_KIND
     by_pid: dict[int, list] = {}
     for h in url_hashes:
         by_pid.setdefault(int(h[:4], 16) % N_PARTITIONS, []).append(h)
-    rows: list[dict] = []
-    for pid in sorted(by_pid):
-        hs = pd.Series(by_pid[pid])
-        if kind == "cuckoo":
-            rows.extend(_cuckoo_build_rows(pid, hs, round_id, MIN_BITS))
-            continue
-        m = size_for(len(hs), MIN_BITS)
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        _set_bits(bits, hs, m)
-        rows.append(_gen_row(pid, bits, m, len(hs), round_id))
-    return rows
+    return [
+        row
+        for pid in sorted(by_pid)
+        for row in _new_generation(pid, by_pid[pid], round_id, kind, MIN_BITS)
+    ]
 
 
 def add_to_filters(filters: DataFrame, hashes_df: DataFrame, round_id: int) -> DataFrame:
@@ -253,49 +286,36 @@ def add_to_filters(filters: DataFrame, hashes_df: DataFrame, round_id: int) -> D
     generation while its capacity holds; otherwise spill the batch into a new
     generation with m = max(size_for(batch), 2 × newest m). Older generations
     pass through untouched."""
-    hashed = hashes_df.select(
-        "url_hash", partition_id_col(F.col("url_hash")).alias("partition_id")
-    )
     min_bits = MIN_BITS  # captured by value — driver config wins on workers
     kind = FILTER_KIND  # for brand-new partitions only; existing rows win
 
-    def _absorb(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def _absorb(left: pa.Table, right: pa.Table) -> pa.Table:
         # left = existing filter rows (≥0 generations), right = new hashes
-        if left.empty:
-            pid = int(right["partition_id"].iloc[0])
-            if kind == "cuckoo":
-                return pd.DataFrame(
-                    _cuckoo_build_rows(pid, right["url_hash"], round_id, min_bits)
-                )
-            m = size_for(len(right), min_bits)
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            _set_bits(bits, right["url_hash"], m)
-            return pd.DataFrame([_gen_row(pid, bits, m, len(right), round_id)])
-        pid = int(left["partition_id"].iloc[0])
-        gens = left.sort_values("m_bits").to_dict("records")
-        out = [dict(g, round=round_id) for g in gens]
-        if right.empty:
-            return pd.DataFrame(out)
-        if out[-1]["filter_kind"] == "cuckoo":
-            return pd.DataFrame(_cuckoo_absorb(out, right, round_id, min_bits))
+        hashes = _hashes(right)
+        if left.num_rows == 0:
+            return _filter_table(
+                _new_generation(_pid(right), hashes, round_id, kind, min_bits)
+            )
+        out = _generations(left, round_id)
         newest = out[-1]
-        capacity = newest["m_bits"] // BITS_PER_ITEM
-        if newest["n_items"] + len(right) <= capacity:
+        if not len(hashes):
+            pass  # untouched partition: its generations pass through
+        elif newest["filter_kind"] == "cuckoo":
+            _cuckoo_absorb(out, hashes, round_id, min_bits)
+        elif newest["n_items"] + len(hashes) <= newest["m_bits"] // BITS_PER_ITEM:
             bits = np.frombuffer(newest["bits"], dtype=np.uint8).copy()
-            _set_bits(bits, right["url_hash"], int(newest["m_bits"]))
+            _set_bits(bits, hashes, newest["m_bits"])
             newest["bits"] = bits.tobytes()
-            newest["n_items"] = int(newest["n_items"]) + len(right)
+            newest["n_items"] += len(hashes)
         else:
-            m = max(size_for(len(right), min_bits), 2 * int(newest["m_bits"]))
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            _set_bits(bits, right["url_hash"], m)
-            out.append(_gen_row(pid, bits, m, len(right), round_id))
-        return pd.DataFrame(out)
+            m = max(size_for(len(hashes), min_bits), 2 * newest["m_bits"])
+            out.append(_bloom_gen(newest["partition_id"], hashes, m, round_id))
+        return _filter_table(out)
 
     return (
         filters.groupBy("partition_id")
-        .cogroup(hashed.groupBy("partition_id"))
-        .applyInPandas(_absorb, FILTER_SCHEMA)
+        .cogroup(_with_pid(hashes_df).groupBy("partition_id"))
+        .applyInArrow(_absorb, FILTER_SCHEMA)
     )
 
 
@@ -307,19 +327,13 @@ def remove_from_filters(
     through the normal definitely-new path on their next sighting (a forced
     re-crawl without an exact-log exception). Each hash is removed from the
     newest generation that holds its fingerprint. Same cogrouped
-    applyInPandas shape as add_to_filters."""
-    hashed = hashes_df.select(
-        "url_hash", partition_id_col(F.col("url_hash")).alias("partition_id")
-    )
-    cols = [f.name for f in FILTER_SCHEMA.fields]
+    applyInArrow shape as add_to_filters."""
 
-    def _remove(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=cols)
-        gens = left.sort_values("m_bits").to_dict("records")
-        out = [dict(g, round=round_id) for g in gens]
-        if right.empty:
-            return pd.DataFrame(out)
+    def _remove(left: pa.Table, right: pa.Table) -> pa.Table:
+        out = _generations(left, round_id)
+        hashes = _hashes(right)
+        if not out or len(hashes) == 0:
+            return _filter_table(out)
         if any(g["filter_kind"] != "cuckoo" for g in out):
             raise ValueError(
                 "seen-filter deletion requires filter_kind='cuckoo' "
@@ -327,24 +341,23 @@ def remove_from_filters(
             )
         from deepcrawl4ai_spark.frontier import cuckoo as CK
 
-        remaining = np.ones(len(right), dtype=bool)
+        remaining = np.ones(len(hashes), dtype=bool)
         for g in reversed(out):  # newest generation first
             if not remaining.any():
                 break
             table = CK.table_from_bytes(g["bits"])
-            sub = right["url_hash"][remaining]
-            fps, i1, i2 = CK.keys(sub, table.shape[0])
+            fps, i1, i2 = CK.keys(hashes[remaining], table.shape[0])
             removed = CK.delete_batch(table, fps, i1, i2)
             g["bits"] = CK.table_to_bytes(table)
-            g["n_items"] = max(0, int(g["n_items"]) - int(removed.sum()))
+            g["n_items"] = max(0, g["n_items"] - int(removed.sum()))
             idx = np.flatnonzero(remaining)
             remaining[idx[removed]] = False
-        return pd.DataFrame(out)
+        return _filter_table(out)
 
     return (
         filters.groupBy("partition_id")
-        .cogroup(hashed.groupBy("partition_id"))
-        .applyInPandas(_remove, FILTER_SCHEMA)
+        .cogroup(_with_pid(hashes_df).groupBy("partition_id"))
+        .applyInArrow(_remove, FILTER_SCHEMA)
     )
 
 
@@ -353,34 +366,26 @@ def merge_filters(existing: DataFrame, new: DataFrame, round_id: int) -> DataFra
     identified by (partition_id, m_bits) — same-size filters share the hash
     family, so their OR is a valid union filter. Bloom-only: cuckoo slots
     collide under OR (add_to_filters/rebuild are the cuckoo merge paths)."""
-    both = existing.unionByName(new)
 
-    def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        if (pdf["filter_kind"] != "bloom").any():
+    def _merge(table: pa.Table) -> pa.Table:
+        gens = table.to_pylist()
+        if any(g["filter_kind"] != "bloom" for g in gens):
             raise ValueError("merge_filters is bloom-only; cuckoo uses add/rebuild")
-        m = int(pdf["m_bits"].iloc[0])
+        m = gens[0]["m_bits"]
         acc = np.zeros(m // 8, dtype=np.uint8)
-        for b in pdf["bits"]:
-            acc |= np.frombuffer(b, dtype=np.uint8)
-        return pd.DataFrame(
-            [
-                _gen_row(
-                    int(pdf["partition_id"].iloc[0]),
-                    acc,
-                    m,
-                    int(pdf["n_items"].sum()),
-                    round_id,
-                )
-            ]
-        )
+        for g in gens:
+            acc |= np.frombuffer(g["bits"], dtype=np.uint8)
+        n = sum(g["n_items"] for g in gens)
+        return _filter_table([_gen_row(gens[0]["partition_id"], acc, m, n, round_id)])
 
-    return both.groupBy("partition_id", "m_bits").applyInPandas(_merge, FILTER_SCHEMA)
+    both = existing.unionByName(new)
+    return both.groupBy("partition_id", "m_bits").applyInArrow(_merge, FILTER_SCHEMA)
 
 
 def maybe_seen(candidates: DataFrame, filters: DataFrame) -> DataFrame:
     """Adds a boolean ``maybe_seen`` to *candidates* (url_hash column required).
 
-    Cogrouped applyInPandas on partition_id — the filter bits travel once per
+    Cogrouped applyInArrow on partition_id — the filter bits travel once per
     partition, never once per row. A row is maybe-seen if ANY generation of
     its partition reports all k bits set."""
     cand = candidates.withColumn(
@@ -389,38 +394,29 @@ def maybe_seen(candidates: DataFrame, filters: DataFrame) -> DataFrame:
     out_schema = T.StructType(
         cand.schema.fields + [T.StructField("maybe_seen", T.BooleanType(), False)]
     )
-    cols = [f.name for f in cand.schema.fields]
 
-    def _test(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(columns=cols + ["maybe_seen"])
-        left = left.copy()
-        if right.empty:
-            left["maybe_seen"] = False
-            return left
-        hit_any = np.zeros(len(left), dtype=bool)
+    def _test(left: pa.Table, right: pa.Table) -> pa.Table:
+        hashes = _hashes(left)
+        hit_any = np.zeros(len(hashes), dtype=bool)
         # ≤ a handful of generation rows — the per-ROW work stays vectorized
-        for gen_kind, gen_bits, gen_m in zip(
-            right["filter_kind"], right["bits"], right["m_bits"]
-        ):
-            if gen_kind == "cuckoo":
+        for g in right.to_pylist() if len(hashes) else ():
+            if g["filter_kind"] == "cuckoo":
                 from deepcrawl4ai_spark.frontier import cuckoo as CK
 
-                table = CK.table_from_bytes(gen_bits)
-                fps, i1, i2 = CK.keys(left["url_hash"], table.shape[0])
+                table = CK.table_from_bytes(g["bits"])
+                fps, i1, i2 = CK.keys(hashes, table.shape[0])
                 hit_any |= CK.contains_batch(table, fps, i1, i2)
                 continue
-            bits = np.frombuffer(gen_bits, dtype=np.uint8)
-            pos = _bit_positions(left["url_hash"], int(gen_m))
+            bits = np.frombuffer(g["bits"], dtype=np.uint8)
+            pos = _bit_positions(hashes, g["m_bits"])
             hit = (bits[pos // 8] & (1 << (pos % 8)).astype(np.uint8)) != 0
             hit_any |= hit.all(axis=1)
-        left["maybe_seen"] = hit_any
-        return left
+        return left.append_column("maybe_seen", pa.array(hit_any))
 
     return (
         cand.groupBy("partition_id")
         .cogroup(filters.groupBy("partition_id"))
-        .applyInPandas(_test, out_schema)
+        .applyInArrow(_test, out_schema)
     )
 
 

@@ -19,8 +19,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # active: the live queue (rewritten per round, O(queue) not O(all-seen));
 # done + seen_hashes + results: append-only (terminal rows / url_hash log /
@@ -66,9 +69,15 @@ class CheckpointStore:
         overwrite: dict[str, DataFrame],
         append: dict[str, DataFrame],
         metrics: dict,
+        finalize: Callable[[dict], None] | None = None,
     ) -> None:
+        """Write every table, then flip the manifest. *finalize*, if given,
+        sees the per-table ``tables_meta`` (files, bytes, exact rows of what
+        each table gained this round) before the manifest is written, so a
+        caller can derive metrics from facts of the commit itself."""
         prev = self.current_snapshot() or {"tables": {}}
         tables: dict[str, list[str]] = {}
+        schemas: dict[str, str] = {}
         jobs: list[tuple] = []
         for name, df in overwrite.items():
             path = self._data_dir(name, round_id)
@@ -97,12 +106,11 @@ class CheckpointStore:
             if os.path.exists(path):  # idempotent re-run after crash
                 shutil.rmtree(path)
             pcol = PARTITIONED_TABLES.get(name)
-            if pcol is not None and pcol in df.columns and not df.isEmpty():
+            if pcol is not None and pcol in df.columns:
                 # cluster rows by the partition value first so each bucket
-                # gets O(1) files per round, not one per upstream task.
-                # (empty rounds fall through to a plain write: a partitioned
-                # write of 0 rows leaves a schema-less dir that can't be read
-                # back; isEmpty is cheap — the df is persisted upstream)
+                # gets O(1) files per round, not one per upstream task. A
+                # 0-row round writes a dir with no data files; it reads back
+                # empty through the manifest's pinned schema.
                 from pyspark.sql import functions as F
 
                 df.repartition(F.col(pcol)).write.mode("overwrite").partitionBy(
@@ -118,22 +126,29 @@ class CheckpointStore:
 
         with ThreadPoolExecutor(max_workers=len(jobs) or 1) as pool:
             list(pool.map(_write, jobs))
-        # per-partition lineage (north_rule): record file/byte counts of the
-        # data each table gained this round — driver-side directory walk,
-        # no Spark job (the Iceberg manifest-entry analog)
+        # per-partition lineage (north_rule): record file/byte/row counts of
+        # the data each table gained this round — driver-side directory walk
+        # plus parquet footers, no Spark job (the Iceberg manifest-entry
+        # analog)
         files_meta: dict[str, dict] = {}
-        for name, _df, path in jobs:
-            n_files = n_bytes = 0
+        for name, df, path in jobs:
+            n_files = n_bytes = n_rows = 0
             for dirpath, _dirs, fnames in os.walk(path):
                 for fn in fnames:
                     if fn.endswith(".parquet"):
+                        fp = os.path.join(dirpath, fn)
                         n_files += 1
-                        n_bytes += os.path.getsize(os.path.join(dirpath, fn))
-            files_meta[name] = {"files": n_files, "bytes": n_bytes}
+                        n_bytes += os.path.getsize(fp)
+                        n_rows += pq.read_metadata(fp).num_rows
+            files_meta[name] = {"files": n_files, "bytes": n_bytes, "rows": n_rows}
+            schemas[name] = df.schema.json()
+        if finalize is not None:
+            finalize(files_meta)
         snap = {
             "round": round_id,
             "tables": tables,
             "tables_meta": files_meta,
+            "schemas": schemas,
             "metrics": metrics,
         }
         snap_path = os.path.join(self.root, "_snapshots", f"r{round_id:05d}.json")
@@ -213,16 +228,31 @@ class CheckpointStore:
         if table not in snap["tables"]:
             return None
         paths = snap["tables"][table]
+        # the schema recorded at commit: a pinned read submits no
+        # schema-inference job (manifests written before schemas were
+        # recorded still infer)
+        schema = (snap.get("schemas") or {}).get(table)
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
         if table in PARTITIONED_TABLES and len(paths) > 1:
             # each round dir is its own hive-partitioned root — read them
             # separately and union (a single multi-path read trips partition
             # discovery across sibling roots); bucket filters still prune
             # files inside every branch
-            out = spark.read.parquet(paths[0])
+            out = reader.parquet(paths[0])
             for p in paths[1:]:
-                out = out.unionByName(spark.read.parquet(p), allowMissingColumns=True)
+                out = out.unionByName(reader.parquet(p), allowMissingColumns=True)
             return out
-        return spark.read.parquet(*paths)
+        return reader.parquet(*paths)
+
+    def table_rows(self, table: str) -> int | None:
+        """Exact row count of an overwrite table in the current snapshot,
+        from the manifest (no Spark job); None if unrecorded."""
+        snap = self.current_snapshot()
+        if snap is None or table not in OVERWRITE_TABLES:
+            return None
+        return (snap.get("tables_meta") or {}).get(table, {}).get("rows")
 
     def expire_snapshots(self, keep_last: int = 3) -> list[int]:
         """TTL cleanup (reference should_cleanup_task, utils.py:156-159;

@@ -1,7 +1,7 @@
 """Partitioned cuckoo-filter URL-seen set — the north_rule's alternative to
 the bloom filter ("partitioned bloom/cuckoo-filter URL-seen set"), sharing
 bloom.py's table layout (FILTER_SCHEMA rows, one per partition generation,
-``filter_kind='cuckoo'``) and its applyInPandas plumbing.
+``filter_kind='cuckoo'``) and its applyInArrow plumbing.
 
 Why a second kind: a cuckoo filter supports DELETION — the seen-set can
 evict a URL so a forced re-crawl flows through the normal "definitely new"
@@ -24,14 +24,15 @@ Layout (partial-key cuckoo hashing, Fan et al. 2014 — public):
   exactly like bloom's generational growth.
 
 Everything except the (rare) kick chains is vectorized numpy; inserts are
-a per-item loop over numpy rows inside the Arrow batch — the same
+a per-item loop over numpy rows inside the Arrow group — the same
 "Python only at declared boundaries" budget as bloom's bit arrays.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
-import pandas as pd
 
 BUCKET_SLOTS = 4
 MAX_KICKS = 250
@@ -71,7 +72,7 @@ def nb_of_m_bits(m_bits: int) -> int:
     return int(m_bits) // (BUCKET_SLOTS * 16)
 
 
-def keys(url_hashes: pd.Series, nb: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def keys(url_hashes: Sequence[str], nb: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(fingerprint, bucket1, bucket2) arrays — fully vectorized."""
     fp = np.array([int(h[16:20], 16) for h in url_hashes], dtype=np.uint32)
     fp[fp == 0] = 1  # 0 is the empty-slot sentinel

@@ -9,7 +9,8 @@ Per round (all DataFrame ops, one driver-side loop):
               millions never travel; above salt_threshold an exact
               (host, salt) pre-stage spreads even the survivors) → exact
               distributed global top-budget (range partition + key cutoff;
-              no TakeOrdered driver merge).
+              no TakeOrdered driver merge) — the ONE selection path; it
+              returns the whole host-capped set when that fits the budget.
   politeness  R3/R5: per-host budget = robots.max_tokens per round — budget
               arithmetic on round numbers, no wall clock, so replays/resume
               are exact.
@@ -18,7 +19,7 @@ Per round (all DataFrame ops, one driver-side loop):
               (deterministic synthetic web here; async client pool on a real
               cluster).
   dedup       J3: bloom prefilter (partitioned, size-adaptive generations,
-              applyInPandas) → exact left-anti rescue ONLY for maybe-seen
+              grouped applyInArrow) → exact left-anti rescue ONLY for maybe-seen
               rows, against ONLY the seen_hashes storage buckets they hash
               into (partition-pruned log scan).
   commit      X3/T7: frontier + seen_filter + results in one atomic snapshot
@@ -30,11 +31,16 @@ with the pure-Python simulator, which is the golden oracle for crawl-order /
 seen-set / span equality.
 
 Efficiency notes (the 100 TB view):
-- Round metrics come from one ≤budget-row collect (test scale, also records
-  crawl order) or two tiny aggregates (bench scale) — never 10^5 rows to the
-  driver.
+- A committed round runs the fetch with its one metrics collect, then the
+  commit writes — no count-first pass, no fetch-then-discard: every URL hits
+  the transport exactly once, whatever the transport.
+- Round metrics come from the fetch job's ≤budget-row collect (test scale,
+  also records crawl order) or one tiny aggregate (bench scale) — never 10^5
+  rows to the driver. new_frontier/dedup_dropped are facts of the commit:
+  the seen_hashes append's row count, read from the parquet footers.
 - The frontier/seen-filter carry between rounds is the just-written snapshot
-  read back lazily (truncates lineage without recomputing the plan).
+  read back lazily with the schema the manifest recorded (truncates lineage
+  without recomputing the plan; no schema-inference job).
 - On a real cluster the frontier table is hash-partitioned by url_hash
   bucket; the per-round rewrite becomes an Iceberg MERGE on the touched
   partitions only.
@@ -49,7 +55,7 @@ from pyspark.sql import functions as F
 
 from deepcrawl4ai_spark.frontier import bloom, webgraph as WG
 from deepcrawl4ai_spark.frontier.checkpoint import CheckpointStore
-from deepcrawl4ai_spark.frontier.fetcher import run_fetch, transport_replayable
+from deepcrawl4ai_spark.frontier.fetcher import run_fetch
 
 FRONTIER_COLS = (
     "url_norm",
@@ -112,14 +118,6 @@ class EngineConfig:
     # (equivalent to refill == capacity). All integer round arithmetic — no
     # wall clock — so replays/resume are exact.
     token_bucket: bool = False
-    # The optimistic selection cut (run_round) fetches the host-capped set
-    # BEFORE confirming it fits the round budget; an overshoot discards the
-    # fetch and re-fetches the exact subset — same-round double fetch. Sound
-    # ONLY when the fetch stage is side-effect-free and replayable (the
-    # synthetic transport is; a real HTTP transport is NOT: double-fetching
-    # is a politeness violation). None = derive from the transport (synthetic
-    # → True, http → False); set explicitly to override.
-    replayable_fetch: bool | None = None
     # Fetch transport dict (fetcher.make_fetch_map): None = env default
     # (CRAWL_TRANSPORT), {"kind": "synthetic"}, or
     # {"kind": "http", "base": "http://host:port"}. Golden parity between the
@@ -236,8 +234,8 @@ class CrawlEngine:
         rps_budget, max_tokens, disallow_rules) — e.g. robots.txt bodies
         fetched over the wire — consumed WITHOUT ever materializing rows on
         the driver: it is localCheckpointed once (the robots CACHE — the wire
-        fetch runs exactly once, not per broadcast re-plan) and the two
-        driver-side bounds come from a single 2-value aggregate."""
+        fetch runs exactly once, not per broadcast re-plan) and the
+        driver-side window bound comes from a single 1-value aggregate."""
         self.spark = spark
         self.cfg = cfg or EngineConfig()
         self.store = CheckpointStore(store_root)
@@ -251,18 +249,12 @@ class CrawlEngine:
             )
             # materialize once, executor-side: this IS the robots cache
             self.robots_df = dim.localCheckpoint()
-            agg = self.robots_df.agg(
-                F.max("max_tokens"), F.sum("max_tokens")
-            ).head()
-            self._max_budget = int(agg[0]) if agg[0] is not None else 2
-            self._sum_host_budgets = int(agg[1]) if agg[1] is not None else 0
+            top = self.robots_df.agg(F.max("max_tokens")).head()[0]
+            self._max_budget = int(top) if top is not None else 2
             return
         robots = robots_rows if robots_rows is not None else WG.robots_rows()
         scaled = [r["max_tokens"] * scale for r in robots]
         self._max_budget = max(scaled, default=2)
-        # upper bound on a round's host-capped selection IF every robots
-        # host has queued candidates — gates the optimistic fetch (below)
-        self._sum_host_budgets = sum(scaled)
         self.robots_df = spark.createDataFrame(
             [
                 (r["host"], t, int(r["rps_budget"]) * scale, r["disallow_rules"])
@@ -597,112 +589,55 @@ class CrawlEngine:
             .filter(F.col("rk") <= F.col("budget"))
             .select(*FRONTIER_COLS)
         )
+        # ONE selection path: the exact global top-budget in canonical order.
+        # When the host-capped set fits the budget, distributed_limit returns
+        # all of it (orderBy+limit below 20k rows; the ranged count above),
+        # so no round ever counts first or fetches twice.
         holds: list[DataFrame] = []
-        host_capped = host_capped.persist()
-        holds.append(host_capped)
+        selected = distributed_limit(host_capped, round_budget, self.spark, holds)
         # rebalance before the fetch: the selected set inherits skewed
         # partitioning (top-of-range or per-host clusters); the fetch stage is
-        # the expensive one and must use every core evenly
+        # the expensive one and must use every core evenly. Fetch + round
+        # metrics in ONE job: a small collect (test scale, also yields the
+        # crawl-order record) or one tiny aggregate (bench scale — never ship
+        # 10^5 rows to the driver).
         n_fetch = self.spark.sparkContext.defaultParallelism
-
-        def _fetch_and_measure(sel: DataFrame):
-            """Fetch + round metrics in ONE job: a small collect (test scale,
-            also yields the crawl-order record) or two tiny aggregates (bench
-            scale — never ship 10^5 rows to the driver)."""
-            fetched = run_fetch(sel.repartition(n_fetch), cfg.transport).persist()
-            order_record: list[str] | None = None
-            per_partition: dict[int, int] = {}
-            if cfg.record_order:
-                meta = fetched.select(
-                    "url_hash",
-                    "score",
-                    "depth",
-                    "fetch_status",
-                    F.size("links").alias("n_links"),
-                    "fetch_pid",
-                ).collect()
-                popped = len(meta)
-                n_success = sum(1 for m in meta if m["fetch_status"] == "success")
-                outlinks = sum(
-                    m["n_links"] for m in meta if m["fetch_status"] == "success"
-                )
-                for m in meta:
-                    per_partition[m["fetch_pid"]] = per_partition.get(m["fetch_pid"], 0) + 1
-                order_record = [
-                    m["url_hash"]
-                    for m in sorted(meta, key=lambda m: (-m["score"], m["depth"], m["url_hash"]))
-                ]
-            else:
-                agg_rows = (
-                    fetched.groupBy("fetch_status", "fetch_pid")
-                    .agg(F.count("*").alias("n"), F.sum(F.size("links")).alias("nl"))
-                    .collect()
-                )
-                popped = sum(a["n"] for a in agg_rows)
-                n_success = sum(a["n"] for a in agg_rows if a["fetch_status"] == "success")
-                outlinks = sum(
-                    a["nl"] or 0 for a in agg_rows if a["fetch_status"] == "success"
-                )
-                for a in agg_rows:
-                    per_partition[a["fetch_pid"]] = per_partition.get(a["fetch_pid"], 0) + a["n"]
-            return fetched, popped, n_success, outlinks, per_partition, order_record
-
-        # OPTIMISTIC selection (floor cut): in the politeness-bound regime —
-        # the common crawl case — the host-capped set already fits the global
-        # budget, so fetch it directly and let an Observation ride along with
-        # that same job to report the selection count; only an overshoot
-        # (budget-bound round) discards and redoes the exact distributed
-        # top-N. Saves one full pass over the queue per round. Gated by a
-        # driver-side bound: Σ per-host budgets ≤ 2× the round budget, else
-        # a wrong guess wastes an unboundedly large fetch (the bound assumes
-        # robots covers the host universe; unknown-host-heavy frontiers fall
-        # back to count-first).
-        fetched = None
-        replayable = (
-            cfg.replayable_fetch
-            if cfg.replayable_fetch is not None
-            else transport_replayable(cfg.transport)
-        )
-        if replayable and self._sum_host_budgets <= 2 * round_budget:
-            from pyspark.sql import Observation
-
-            obs = Observation(f"sel_r{r}")
-            observed = host_capped.observe(obs, F.count(F.lit(1)).alias("n"))
-            (
-                fetched,
-                popped,
-                n_success,
-                outlinks_seen,
-                per_partition,
-                order_record,
-            ) = _fetch_and_measure(observed)
-            # popped == 0 → the empty plan may have been constant-folded away
-            # (PropagateEmptyRelation prunes the observe node; get would
-            # fail), and 0 rows can't overshoot the budget anyway
-            n_capped = int(obs.get["n"]) if popped > 0 else 0
+        fetched = run_fetch(selected.repartition(n_fetch), cfg.transport).persist()
+        order_record: list[str] | None = None
+        per_partition: dict[int, int] = {}
+        if cfg.record_order:
+            meta = fetched.select(
+                "url_hash",
+                "score",
+                "depth",
+                "fetch_status",
+                F.size("links").alias("n_links"),
+                "fetch_pid",
+            ).collect()
+            popped = len(meta)
+            n_success = sum(1 for m in meta if m["fetch_status"] == "success")
+            outlinks_seen = sum(
+                m["n_links"] for m in meta if m["fetch_status"] == "success"
+            )
+            for m in meta:
+                per_partition[m["fetch_pid"]] = per_partition.get(m["fetch_pid"], 0) + 1
+            order_record = [
+                m["url_hash"]
+                for m in sorted(meta, key=lambda m: (-m["score"], m["depth"], m["url_hash"]))
+            ]
         else:
-            n_capped = host_capped.count()
-        if n_capped > round_budget:
-            if fetched is not None:
-                fetched.unpersist()
-            selected = distributed_limit(host_capped, round_budget, self.spark, holds)
-            (
-                fetched,
-                popped,
-                n_success,
-                outlinks_seen,
-                per_partition,
-                order_record,
-            ) = _fetch_and_measure(selected)
-        elif fetched is None:  # count-first path and selection fits
-            (
-                fetched,
-                popped,
-                n_success,
-                outlinks_seen,
-                per_partition,
-                order_record,
-            ) = _fetch_and_measure(host_capped)
+            agg_rows = (
+                fetched.groupBy("fetch_status", "fetch_pid")
+                .agg(F.count("*").alias("n"), F.sum(F.size("links")).alias("nl"))
+                .collect()
+            )
+            popped = sum(a["n"] for a in agg_rows)
+            n_success = sum(a["n"] for a in agg_rows if a["fetch_status"] == "success")
+            outlinks_seen = sum(
+                a["nl"] or 0 for a in agg_rows if a["fetch_status"] == "success"
+            )
+            for a in agg_rows:
+                per_partition[a["fetch_pid"]] = per_partition.get(a["fetch_pid"], 0) + a["n"]
         for h in holds:
             h.unpersist()
         _mark("select_fetch_metrics")
@@ -791,6 +726,8 @@ class CrawlEngine:
             new_src = flagged.filter(~F.col("maybe_seen")).unionByName(rescued)
         else:  # bloom says every candidate is definitely new — no log scan
             new_src = flagged.filter(~F.col("maybe_seen"))
+        # persisted: the active, seen_filter and seen_hashes writes of the
+        # commit all read it; its row count comes from the commit itself
         new_rows = (
             new_src
             .select(
@@ -806,8 +743,6 @@ class CrawlEngine:
             )
             .persist()
         )
-        new_count = new_rows.count()
-        _mark("outlinks_dedup")
 
         # frontier state update (the "pop" rewrite — reference LTRIM analog).
         # The outcome side is ≤ round-budget rows (tiny next to the queue):
@@ -850,7 +785,7 @@ class CrawlEngine:
         done_rows = updated.filter(F.col("state") != "queued")
         # bound write fan-out with a repartition (NOT coalesce — coalesce
         # would cap the upstream join's parallelism too). Fan-out is sized
-        # from the tracked queue estimate when the driver supplies one
+        # from the live queue's row count when the driver supplies one
         # (guide §6: file count follows data volume, not core count — a
         # 16k-row bench frontier gets 4 files, a 10M-row drain still gets
         # one per core), falling back to defaultParallelism.
@@ -858,11 +793,7 @@ class CrawlEngine:
         if active_est is None:
             n_write = n_par
         else:
-            import os as _os2
-
-            rows_per_file = int(
-                _os2.environ.get("CRAWL_WRITE_ROWS_PER_FILE", "250000")
-            )
+            rows_per_file = int(_os.environ.get("CRAWL_WRITE_ROWS_PER_FILE", "250000"))
             n_write = min(n_par, max(4, active_est // rows_per_file + 1))
         new_active = (
             updated.filter(F.col("state") == "queued")
@@ -895,8 +826,6 @@ class CrawlEngine:
             "urls_fetched": n_success,
             "urls_failed": popped - n_success,
             "outlinks_seen": int(outlinks_seen),
-            "dedup_dropped": int(outlinks_seen) - int(new_count),
-            "new_frontier": int(new_count),
             "per_partition": [
                 {"pid": pid, "rows": n} for pid, n in sorted(per_partition.items())
             ],
@@ -920,6 +849,15 @@ class CrawlEngine:
                 .cast("int")
                 .alias("tokens"),
             )
+
+        def _counts(tables_meta: dict) -> None:
+            # the seen_hashes append IS this round's new frontier: its exact
+            # row count is read from the parquet footers the commit already
+            # walks — no count job, and nothing an empty plan can prune away
+            new_count = tables_meta["seen_hashes"]["rows"]
+            metrics["new_frontier"] = new_count
+            metrics["dedup_dropped"] = int(outlinks_seen) - new_count
+
         # the rounds lineage table lives in the snapshot manifests (the
         # manifest IS the commit) — no per-round parquet job for it
         self.store.commit_round(
@@ -933,8 +871,9 @@ class CrawlEngine:
                 ),
             },
             metrics=metrics,
+            finalize=_counts,
         )
-        _mark("commit")
+        _mark("dedup_commit")
         # carry the just-written snapshot (lazy read-back: truncates lineage
         # without recomputing the plan a second time)
         carried_frontier = self.store.read(self.spark, "active")
@@ -1025,21 +964,13 @@ class CrawlEngine:
         # (re)build — pure driver arithmetic over committed metrics, no jobs
         seen_total = 0
         built_n = 0
-        # live-queue size estimate (file-sizing only — factor-2 accuracy is
-        # fine): seeds + new frontier − popped; retried failures re-enter the
-        # queue so this slightly undercounts, which only costs a file split
-        active_est = 0
         for m0 in committed:
             if m0.get("round", -1) < 0:
                 seen_total = max(m0.get("seeded") or 0, 0)
                 built_n = seen_total
-                active_est = seen_total
             else:
                 seen_total += m0.get("new_frontier", 0) or 0
                 built_n = m0.get("bloom_built_n", built_n)
-                active_est += (m0.get("new_frontier", 0) or 0) - (
-                    m0.get("urls_popped", 0) or 0
-                )
         # below this the initial MIN_BITS floor still has headroom — never
         # rebuild inside it
         rebuild_floor = bloom.N_PARTITIONS * bloom.MIN_BITS // bloom.BITS_PER_ITEM
@@ -1071,7 +1002,8 @@ class CrawlEngine:
                 filters,
                 budget,
                 extra_metrics=extra,
-                active_est=max(active_est, 0),
+                # the live queue's exact size, from the last commit's footers
+                active_est=self.store.table_rows("active"),
                 seen_est=seen_total,
             )
             if m.get("empty"):
@@ -1088,8 +1020,5 @@ class CrawlEngine:
             frontier, filters = nf, nflt
             last_metrics = m
             seen_total += m.get("new_frontier", 0) or 0
-            active_est += (m.get("new_frontier", 0) or 0) - (
-                m.get("urls_popped", 0) or 0
-            )
             yield m
             r += 1

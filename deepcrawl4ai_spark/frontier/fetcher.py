@@ -9,9 +9,9 @@ Transports:
   speaking the lossless HTML page format (htmlpage), and parse the HTML back
   into spans/links. This is the reference's pooled-browser fetch shape
   (reference actions.py:218-293, crawler_pool.py:25-49) with the stdlib
-  client standing in for aiohttp/playwright. NOT replayable: the engine
-  disables its optimistic fetch-then-discard path for it
-  (EngineConfig.replayable_fetch).
+  client standing in for aiohttp/playwright. NOT replayable — and never
+  asked to be: the engine selects each round's exact set before the fetch
+  stage runs, so every transport sees each URL once.
 
 Concurrency (O4, reference actions.py:254 ``max_session_permit=10`` with a
 global cap, server.py:66-84): the http transport fans each Arrow batch out
@@ -259,18 +259,7 @@ def default_transport() -> dict:
     t: dict = {"kind": kind}
     if kind == "http":
         t["base"] = _os.environ.get("CRAWL_HTTP_BASE", "http://127.0.0.1:8765")
-        # an HTTP fetch is a side effect; only a caller who KNOWS the server
-        # is a replay-safe cache may mark it replayable
-        t["replayable"] = _os.environ.get("CRAWL_HTTP_REPLAYABLE") == "1"
     return t
-
-
-def transport_replayable(transport: dict | None = None) -> bool:
-    """May the engine speculatively fetch-then-discard (optimistic selection)?
-    True only for side-effect-free transports (ADVICE r2: a double fetch over
-    a real wire is a politeness violation)."""
-    t = transport or default_transport()
-    return t["kind"] == "synthetic" or bool(t.get("replayable"))
 
 
 def transport_concurrency(transport: dict) -> int:

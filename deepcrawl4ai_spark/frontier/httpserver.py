@@ -8,7 +8,7 @@ server rendering webgraph pages through the lossless HTML wire format
 404 — so the client exercises real status-code handling, keep-alive
 connection reuse (HTTP/1.1 + Content-Length), and a request counter the
 politeness tests read to prove each URL was fetched over the wire exactly
-once (no optimistic double fetch with a non-replayable transport).
+once.
 """
 
 from __future__ import annotations

@@ -29,8 +29,8 @@ def main() -> None:
         "--transport",
         choices=("synthetic", "http"),
         default="synthetic",
-        help="fetch transport; http needs --http-base (the engine disables "
-        "optimistic double-fetch for it automatically)",
+        help="fetch transport; http needs --http-base (either way each "
+        "selected URL is fetched exactly once)",
     )
     ap.add_argument("--http-base", default="http://127.0.0.1:8765")
     ap.add_argument(
@@ -49,7 +49,8 @@ def main() -> None:
         "--health-gauges",
         action="store_true",
         help="sample real cpu/mem per round (monitor.SystemSampler) into the "
-        "budget gate + metrics (non-replayable — off for golden runs)",
+        "budget gate + metrics (wall-clock gauges: a replay does not "
+        "reproduce them — off for golden runs)",
     )
     args = ap.parse_args()
 

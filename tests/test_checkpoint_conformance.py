@@ -142,3 +142,71 @@ def test_metrics_lineage_and_prometheus(store, spark):
     text = store.prometheus_metrics()
     assert "crawl_rounds_total 1" in text
     assert "crawl_urls_popped_total 7" in text
+
+
+# --- the parquet+manifest backend's commit facts --------------------------------
+
+SEEN = "url_hash string, bucket int"
+
+
+def _two_rounds(store, spark):
+    """Round 0 appends two seen_hashes rows; round 1 appends none (a
+    partitioned write of 0 rows leaves a dir with no data files)."""
+    store.commit_round(
+        0,
+        overwrite={"active": _df(spark, [("a", 1), ("b", 2), ("c", 3)])},
+        append={"seen_hashes": _df(spark, [("a", 1), ("b", 2)], SEEN)},
+        metrics={"round": 0},
+    )
+    store.commit_round(
+        1,
+        overwrite={"active": _df(spark, [("c", 3)])},
+        append={"seen_hashes": _df(spark, [], SEEN)},
+        metrics={"round": 1},
+    )
+
+
+def test_manifest_rows_and_schema_pinned_read_submits_no_jobs(tmp_path, spark):
+    """The manifest records each table's exact row count (parquet footers)
+    and schema; reading a committed table — an empty partitioned append
+    included — submits no Spark job."""
+    store = CheckpointStore(str(tmp_path))
+    _two_rounds(store, spark)
+    snap = store.current_snapshot()
+    assert snap["tables_meta"]["active"]["rows"] == 1
+    assert snap["tables_meta"]["seen_hashes"]["rows"] == 0
+    assert store.snapshot_at(0)["tables_meta"]["seen_hashes"]["rows"] == 2
+    assert store.table_rows("active") == 1
+    assert set(snap["schemas"]) == {"active", "seen_hashes"}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("pinned_read_probe", "pinned read probe")
+    try:
+        before = sc.statusTracker().getJobIdsForGroup("pinned_read_probe")
+        active = store.read(spark, "active")
+        seen = store.read(spark, "seen_hashes")
+        after = sc.statusTracker().getJobIdsForGroup("pinned_read_probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert before == after == []
+    assert [r["url_hash"] for r in active.collect()] == ["c"]
+    assert sorted(tuple(r) for r in seen.collect()) == [("a", 1), ("b", 2)]
+
+
+def test_manifest_without_schemas_still_reads(tmp_path, spark):
+    """Manifests written before schemas were recorded read by inference."""
+    import json
+    import os
+
+    store = CheckpointStore(str(tmp_path))
+    _two_rounds(store, spark)
+    cur = os.path.join(str(tmp_path), "_current.json")
+    with open(cur) as f:
+        snap = json.load(f)
+    del snap["schemas"]
+    snap["tables"]["seen_hashes"] = snap["tables"]["seen_hashes"][:1]  # no empty dir
+    with open(cur, "w") as f:
+        json.dump(snap, f)
+    assert [r["url_hash"] for r in store.read(spark, "active").collect()] == ["c"]
+    seen = store.read(spark, "seen_hashes")
+    assert sorted((r["url_hash"], r["bucket"]) for r in seen.collect()) == [("a", 1), ("b", 2)]

@@ -167,3 +167,23 @@ def test_golden_crawl_equality_bloom_vs_cuckoo(spark, tmp_path_factory, monkeypa
         assert a["crawl_order"] == b["crawl_order"]
         for k in ("urls_popped", "urls_fetched", "new_frontier", "dedup_dropped"):
             assert a[k] == b[k]
+
+
+def test_add_to_filters_spill_rows_equal_local_absorb(spark, monkeypatch):
+    """The Arrow cogrouped absorb emits byte-identical rows to the same
+    absorb run on the driver, across a generation spill and whatever order
+    the shuffle delivers the new hashes in."""
+    monkeypatch.setattr(bloom, "FILTER_KIND", "cuckoo")
+    monkeypatch.setattr(bloom, "MIN_BITS", 4096)  # 64-bucket floor → cap 215
+    first, second = _hashes_p0("g1", 200), _hashes_p0("g2", 400)
+    local = bloom.build_filter_rows_local(first, 0)
+    got = bloom.add_to_filters(
+        spark.createDataFrame(local, bloom.FILTER_SCHEMA),
+        spark.createDataFrame([(h,) for h in second], ["url_hash"]).repartition(5),
+        1,
+    ).collect()
+    want = bloom._cuckoo_absorb(
+        [dict(local[0], round=1)], np.array(second, dtype=object), 1, 4096
+    )
+    assert len(want) == 2, "expected a generation spill"
+    assert sorted((r.asDict() for r in got), key=lambda r: r["m_bits"]) == want

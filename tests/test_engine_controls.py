@@ -365,3 +365,67 @@ def test_crash_between_data_write_and_pointer_flip(spark, tmp_path_factory):
     assert m[0]["crawl_order"] == sim.crawl_order[2]
     frontier = eng2.store.read(spark, "frontier")
     assert {r["url_hash"] for r in frontier.select("url_hash").collect()} == sim.seen
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_zero_new_rows_round_at_max_depth(spark, tmp_path_factory, monkeypatch, kind):
+    """A frontier at max_depth yields no outlinks: the round appends 0
+    seen_hashes rows, commits without blocking, reports new_frontier == 0
+    like the simulator, and the empty append reads back."""
+    from deepcrawl4ai_spark.frontier import bloom
+
+    monkeypatch.setattr(bloom, "FILTER_KIND", kind)
+    cfg = dict(CFG, max_depth=0)
+    seeds = WG.gen_seeds(48)
+    sim = simulate(seeds, SimConfig(max_rounds=2, **cfg))
+    eng = CrawlEngine(
+        spark, str(tmp_path_factory.mktemp(f"zero_{kind}")), EngineConfig(max_rounds=2, **cfg)
+    )
+    metrics = eng.run(seeds)
+    assert len(metrics) == len(sim.round_metrics) >= 1
+    for i, (m, ref) in enumerate(zip(metrics, sim.round_metrics)):
+        assert m["crawl_order"] == sim.crawl_order[i], f"round {i}"
+        assert m["new_frontier"] == ref["new_frontier"] == 0
+        assert m["dedup_dropped"] == ref["dedup_dropped"] == m["outlinks_seen"]
+    assert eng.store.current_snapshot()["tables_meta"]["seen_hashes"]["rows"] == 0
+    seen = {r["url_hash"] for r in eng.store.read(spark, "seen_hashes").collect()}
+    assert seen == sim.seen
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_zero_new_rows_round_all_outlinks_seen(spark, tmp_path_factory, monkeypatch, kind):
+    """Every outlink already seen: the frontier holds the heads' outlinks at
+    max_depth (so they link nowhere), the round's outlinks all dedup away,
+    and the round commits new_frontier == 0 with dedup_dropped ==
+    outlinks_seen."""
+    from deepcrawl4ai_spark.frontier import bloom
+
+    monkeypatch.setattr(bloom, "FILTER_KIND", kind)
+    max_depth = 2
+    heads = WG.seed_frontier_rows(WG.gen_seeds(24))
+    known = {r["url_hash"] for r in heads}
+    tails = {}
+    for r in heads:
+        for u in WG.fetch_page(r["url_norm"]).outlinks:
+            if WG.sha1_hex(u) not in known:
+                tails[WG.sha1_hex(u)] = u
+
+    def host(u):
+        return u.split("://", 1)[1].split("/", 1)[0]
+
+    # tails score below every head, so the heads pop first
+    rows = [
+        (r["url_norm"], r["url_hash"], host(r["url_norm"]), 0, r["score"], 0, "queued", 0, 0)
+        for r in heads
+    ] + [(u, h, host(u), max_depth, -1.0, 0, "queued", 0, 0) for h, u in tails.items()]
+    eng = CrawlEngine(
+        spark,
+        str(tmp_path_factory.mktemp(f"allseen_{kind}")),
+        EngineConfig(max_rounds=1, global_budget=len(heads), max_depth=max_depth),
+    )
+    eng.submit_frontier(spark.createDataFrame(rows, CrawlEngine._frontier_schema()))
+    (m,) = eng.run()
+    assert m["urls_fetched"] > 0 and m["outlinks_seen"] > 0
+    assert m["new_frontier"] == 0 and m["dedup_dropped"] == m["outlinks_seen"]
+    assert eng.store.current_snapshot()["tables_meta"]["seen_hashes"]["rows"] == 0
+    assert eng.store.read(spark, "seen_hashes").count() == len(rows)

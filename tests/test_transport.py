@@ -4,9 +4,10 @@ The crawl engine's fetch stage goes over a REAL wire (stdlib keep-alive
 client pool → local threaded server rendering the synthetic web as HTML,
 reference actions.py:218-293 / crawler_pool.py:25-49 shape) and must produce
 byte-identical spans, crawl order, and seen set to the in-process synthetic
-transport — plus fetch each URL over the wire exactly once (the optimistic
-double-fetch path must auto-disable for a non-replayable transport,
-ADVICE r2)."""
+transport — plus fetch each URL over the wire exactly once (ADVICE r2: a
+double fetch over a real wire is a politeness violation). Every transport
+takes the engine's one selection path — the exact round set is chosen
+before the fetch stage runs — so no round can fetch a URL twice."""
 
 from __future__ import annotations
 
@@ -14,7 +15,6 @@ import pytest
 
 from deepcrawl4ai_spark.frontier import webgraph as WG
 from deepcrawl4ai_spark.frontier.engine import CrawlEngine, EngineConfig
-from deepcrawl4ai_spark.frontier.fetcher import transport_replayable
 from deepcrawl4ai_spark.frontier.htmlpage import parse_html, render_html
 from deepcrawl4ai_spark.frontier.httpserver import SyntheticWebServer
 
@@ -37,14 +37,6 @@ def test_html_roundtrip_identity():
             assert back.outlinks == page.outlinks, page.url_norm
             checked += 1
     assert checked > 50
-
-
-def test_transport_replayability_flags():
-    assert transport_replayable({"kind": "synthetic"})
-    assert not transport_replayable({"kind": "http", "base": "http://x:1"})
-    assert transport_replayable(
-        {"kind": "http", "base": "http://x:1", "replayable": True}
-    )
 
 
 @pytest.fixture(scope="module")
@@ -95,9 +87,7 @@ def test_http_transport_golden_parity(spark, tmp_path_factory, webserver):
     }
     assert seen(eng_h) == seen(eng_s)
 
-    # politeness audit: every popped URL hit the wire EXACTLY once — the
-    # engine must not have taken the optimistic fetch-then-discard path
-    # with a non-replayable transport
+    # politeness audit: every popped URL hit the wire EXACTLY once
     total_popped = sum(m["urls_popped"] for m in m_h)
     assert webserver.n_requests == total_popped
 
@@ -297,7 +287,7 @@ def test_robots_df_distributed_no_driver_collect(spark, webserver):
 
 def test_engine_with_robots_df_wire_parity(spark, tmp_path_factory, webserver):
     """CrawlEngine(robots_df=...) — politeness dim fetched AND consumed
-    distributed (localCheckpointed robots cache, 2-value driver aggregate) —
+    distributed (localCheckpointed robots cache, 1-value driver aggregate) —
     byte-equals the synthetic-config crawl."""
     from pyspark.sql import functions as F
 

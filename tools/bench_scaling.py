@@ -294,8 +294,8 @@ def main() -> None:
                 }
         if server is not None:
             # wire-level exactly-once audit at bench scale: every popped URL
-            # hit the origin exactly once (no optimistic double fetch, no
-            # retry double-GET)
+            # hit the origin exactly once (no double fetch, no retry
+            # double-GET)
             out["wire_requests"] = server.n_requests
             out["wire_exactly_once"] = server.n_requests == popped
             out["wire_delay_ms"] = args.wire_delay_ms
